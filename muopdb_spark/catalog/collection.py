@@ -35,12 +35,15 @@ segment. Spark-first re-expression (SURVEY.md §1.1, §2.1, §2.9):
 
 from __future__ import annotations
 
+import dataclasses
 import json
 import os
 import tempfile
+import threading
 import uuid
 from dataclasses import asdict, dataclass, field
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -122,19 +125,14 @@ def _dir_bytes(path: str) -> int:
     return total
 
 
-_APPEND_LOCKS: dict[str, "threading.Lock"] = {}
-_APPEND_LOCKS_GUARD = None  # created lazily (threading imported in-function)
+_APPEND_LOCKS: dict[str, threading.Lock] = {}
+_APPEND_LOCKS_GUARD = threading.Lock()
 
 
-def _append_lock_for(root: str) -> "threading.Lock":
+def _append_lock_for(root: str) -> threading.Lock:
     """Process-wide lock per collection directory (normalized path).
     The FileOutputCommitter `_temporary/0` staging race this guards is a
     property of the DIRECTORY, not of a Collection instance."""
-    import threading
-
-    global _APPEND_LOCKS_GUARD
-    if _APPEND_LOCKS_GUARD is None:
-        _APPEND_LOCKS_GUARD = threading.Lock()
     key = os.path.realpath(root)
     with _APPEND_LOCKS_GUARD:
         return _APPEND_LOCKS.setdefault(key, threading.Lock())
@@ -170,15 +168,15 @@ def _swap_parquet_dir(df, path: str):
     shutil.rmtree(old, ignore_errors=True)
 
 
-def _read_swapped_parquet(spark: SparkSession, path: str):
-    """Read a _swap_parquet_dir-managed directory, recovering from a
-    crash inside the swap window (current missing, .old present ->
-    restore .old) and sweeping stale .swap-* staging siblings. The
-    sweep is AGE-GATED (r16): an unconditional sweep raced a
-    concurrent _swap_parquet_dir in the same process — the reader
-    deleted the writer's in-flight staging dir and failed its swap.
-    Only leftovers old enough to be crash debris are removed; data is
-    never at risk either way (staging is invisible until renamed)."""
+def _recover_swap(path: str) -> None:
+    """Recover a _swap_parquet_dir-managed directory from a crash inside
+    the swap window (current missing, .old present -> restore .old) and
+    sweep stale .swap-* staging siblings. The sweep is AGE-GATED (r16):
+    an unconditional sweep raced a concurrent _swap_parquet_dir in the
+    same process — the reader deleted the writer's in-flight staging
+    dir and failed its swap. Only leftovers old enough to be crash
+    debris are removed; data is never at risk either way (staging is
+    invisible until renamed)."""
     import glob
     import shutil
     import time
@@ -192,7 +190,75 @@ def _read_swapped_parquet(spark: SparkSession, path: str):
                 shutil.rmtree(stale, ignore_errors=True)
         except OSError:
             continue  # concurrently finished/removed: nothing to sweep
+
+
+def _read_swapped_parquet(spark: SparkSession, path: str):
+    """Read a _swap_parquet_dir-managed directory after _recover_swap."""
+    _recover_swap(path)
     return spark.read.parquet(path)
+
+
+def _parquet_files(path: str) -> tuple[str, ...]:
+    """The cache stamp of a MUTABLE parquet directory: its data file
+    names. Spark names every file it writes with its job's UUID, so an
+    append or a rewrite always changes the listing."""
+    try:
+        return tuple(sorted(p for p in os.listdir(path) if p.endswith(".parquet")))
+    except FileNotFoundError:
+        return ()
+
+
+def _fold(t: np.ndarray) -> np.ndarray:
+    """Row sums of `t` bit-equal to distance._fsum, the left fold
+    0.0 + t0 + t1 + ...: np.cumsum adds in the same order (np.sum's
+    pairwise reduction does not), and the trailing + 0.0 turns the one
+    result that differs, an all -0.0 row, into the fold's +0.0."""
+    return np.cumsum(t, axis=1)[:, -1] + 0.0
+
+
+def _centroid_distances(metric: str, c: np.ndarray, q: np.ndarray) -> np.ndarray:
+    """score_expr(metric, centroid, q) for every row of `c`, computed
+    with the same IEEE operations in the same order, so the floats (and
+    hence the probe's ties and ratio cuts) are those of the Spark
+    expression."""
+    q = q[None, :]
+    if metric in ("l2", "l2_squared"):
+        d = _fold((c - q) * (c - q))
+        return np.sqrt(d) if metric == "l2" else d
+    dot = _fold(c * q)
+    if metric == "dot":
+        return -dot
+    if metric == "cosine":
+        with np.errstate(divide="ignore", invalid="ignore"):
+            return 1.0 - dot / (np.sqrt(_fold(c * c)) * np.sqrt(_fold(q * q)))
+    raise ValueError(f"unknown distance metric {metric!r}")
+
+
+def _probe(table, users, q, metric: str, num_probes: int,
+           ratio: float | None) -> list[tuple[int, int]]:
+    """The probed (user_id, centroid_id) pairs of one segment, picked on
+    the driver from its collected centroid table (user ids, centroid
+    ids, centroid matrix) the way a Spark window over the table would:
+    per user, centroids ordered by (d asc, centroid_id asc), the first
+    num_probes kept, then the V19 ratio prune d - d_min <= |d_min| *
+    ratio. abs(d_min) is a DELIBERATE deviation from the reference's
+    `min * ratio` (spann/index.rs:233-246): for the negated-dot metric
+    d_min is negative, and the reference's threshold would drop every
+    non-nearest centroid."""
+    uid, cid, cents = table
+    m = np.isin(uid, users)
+    if not m.any():
+        return []
+    uid, cid = uid[m], cid[m]
+    d = _centroid_distances(metric, cents[m], np.asarray(q, dtype=np.float64))
+    order = np.lexsort((cid, d, uid))
+    uid, cid, d = uid[order], cid[order], d[order]
+    pos = np.arange(len(uid))
+    first = np.maximum.accumulate(np.where(np.r_[True, uid[1:] != uid[:-1]], pos, 0))
+    keep = pos - first < num_probes
+    if ratio is not None:
+        keep &= d - d[first] <= np.abs(d[first]) * ratio
+    return list(zip(uid[keep].tolist(), cid[keep].tolist()))
 
 
 class Collection:
@@ -218,6 +284,16 @@ class Collection:
         # directory (Collection.create then Collection.open), which
         # per-instance locks would not serialize.
         self._append_lock = _append_lock_for(self.root)
+        # Resolved read artifacts (parquet relations, loaded segment
+        # indexes, collected centroid tables): (kind, name) -> (stamp,
+        # value). Segment artifacts are write-once (segment names are
+        # fresh UUIDs): stamp None, dropped when the segment leaves the
+        # TOC. Mutable directories (tombstones, root codebooks) are
+        # stamped with their file listing, so any writer's change, from
+        # any Collection object, forces a re-read. Locked because the
+        # serving loop shares one Collection between threads.
+        self._cache: dict[tuple[str, str], tuple] = {}
+        self._cache_lock = threading.Lock()
 
     # ------------------------------------------------------------ DDL
 
@@ -241,6 +317,41 @@ class Collection:
 
     def _config_path(self) -> str:
         return os.path.join(self.root, "collection_config.json")
+
+    # ----------------------------------------------------- read cache
+
+    def _cached(self, key: tuple[str, str], build, stamp=None):
+        """build() once per key and stamp. Built outside the lock, so a
+        cold read on one thread never blocks another thread's hits; two
+        racing builds of one key are both valid and the last one stays."""
+        with self._cache_lock:
+            hit = self._cache.get(key)
+        if hit is not None and hit[0] == stamp:
+            return hit[1]
+        value = build()
+        with self._cache_lock:
+            self._cache[key] = (stamp, value)
+        return value
+
+    def _evict(self, segs) -> None:
+        """Drop the cached artifacts of segments that left the TOC."""
+        gone = set(segs)
+        with self._cache_lock:
+            for key in [k for k in self._cache if k[1] in gone]:
+                del self._cache[key]
+
+    def _segment_table(self, seg: str, sub: str) -> DataFrame:
+        path = os.path.join(self._segment_dir(seg), sub)
+        return self._cached((sub, seg), lambda: self.spark.read.parquet(path))
+
+    def _root_table(self, name: str) -> DataFrame:
+        """A swap-managed table at the collection root (the per-user
+        codebooks): crash window recovered first, then read once per
+        file listing."""
+        path = os.path.join(self.root, name)
+        _recover_swap(path)
+        return self._cached(("root", name), lambda: self.spark.read.parquet(path),
+                            stamp=_parquet_files(path))
 
     # ------------------------------------------------------------ TOC
 
@@ -437,33 +548,38 @@ class Collection:
             os.replace(tmp, d)
 
     def tombstones(self) -> DataFrame:
+        """The tombstone log as of its current file listing. The
+        relation is resolved once per listing, and a relation keeps the
+        files it listed, so a caller holding it holds a snapshot."""
         self._recover_tombstones()
         d = self._tombstone_dir()
-        if os.path.isdir(d) and any(p.endswith(".parquet") for p in os.listdir(d)):
-            return self.spark.read.parquet(d)
-        return self.spark.createDataFrame([], "user_id long, doc_id long, seq_no long")
+        files = _parquet_files(d)
 
-    def _tomb_latest(self, tomb: DataFrame | None = None) -> DataFrame:
-        """Newest tombstone per (user, doc) — the only one that matters
-        for masking, since tombstone seq_nos are totally ordered.
-        `tomb` pins the computation to a caller-held snapshot (see
-        _apply_tombstones)."""
-        return (
-            (tomb if tomb is not None else self.tombstones())
-            .groupBy("user_id", "doc_id")
-            .agg(F.max("seq_no").alias("tomb_seq"))
-        )
+        def read() -> DataFrame:
+            if files:
+                return self.spark.read.parquet(d)
+            # statically empty (a pruned false filter), so the optimizer
+            # drops the masking anti join instead of shuffling for it
+            return self.spark.range(1).select(*[
+                F.lit(None).cast("long").alias(c) for c in ("user_id", "doc_id", "seq_no")
+            ]).filter(F.lit(False))
+
+        return self._cached(("root", "tombstones"), read, stamp=files)
 
     def _apply_tombstones(
-        self, df: DataFrame, tomb: DataFrame | None = None
+        self, df: DataFrame, tomb: DataFrame | None = None, *,
+        users: list[int] | None = None, id_col: str = "doc_id",
     ) -> DataFrame:
         """V20 masking, seq_no-aware: a tombstone hides only doc rows
         written AT OR BEFORE it (docs.seq_no <= tomb.seq_no), so a doc
         re-inserted after a remove is searchable again — matching the
         reference, which invalidates only ids present at remove time
         (core.rs remove_impl guards on sequence_number). Planned as an
-        anti hash join on the (user_id, doc_id) equi keys with the
-        seq_no comparison as the join residual — no nested loop.
+        anti hash join of the RAW tombstone rows (restricted to `users`
+        when given) on the (user_id, id) equi keys with the seq_no
+        comparison as the join residual — no nested loop, and no
+        aggregate: "some tombstone of the doc is at or above the row's
+        seq_no" is the same condition as "the newest one is".
 
         `tomb` lets rewrite paths (merge/vacuum) pass ONE tombstone
         snapshot shared with their applied-watermark computation: a
@@ -472,12 +588,14 @@ class Collection:
         newer than the masking read) would mark a tombstone applied
         without applying it, and the subsequent prune would delete an
         unapplied deletion (r16 review finding on merge_segments)."""
-        t = self._tomb_latest(tomb).select(
-            F.col("user_id").alias("_tu"), F.col("doc_id").alias("_td"), "tomb_seq"
-        )
+        t = (tomb if tomb is not None else self.tombstones()).select(
+            F.col("user_id").alias("_tu"), F.col("doc_id").alias("_td"),
+            F.col("seq_no").alias("_ts"))
+        if users is not None:
+            t = t.filter(F.col("_tu").isin(users))
         cond = (
-            (df["user_id"] == t["_tu"]) & (df["doc_id"] == t["_td"])
-            & (df["seq_no"] <= t["tomb_seq"])
+            (F.col("user_id") == F.col("_tu")) & (F.col(id_col) == F.col("_td"))
+            & (F.col("seq_no") <= F.col("_ts"))
         )
         return df.join(t, cond, "left_anti")
 
@@ -528,7 +646,7 @@ class Collection:
     # ------------------------------------------------------------ reads
 
     def segment_docs(self, seg: str) -> DataFrame:
-        return self.spark.read.parquet(os.path.join(self._segment_dir(seg), "docs"))
+        return self._segment_table(seg, "docs")
 
     def docs(self, version: int | None = None, with_tombstones: bool = False) -> DataFrame:
         """All flushed docs at a TOC version (MVCC snapshot read), with
@@ -540,8 +658,7 @@ class Collection:
             return self.spark.createDataFrame([], empty)
         df = self.segment_docs(segs[0])
         for s in segs[1:]:
-            df = df.unionByName(self.spark.read.parquet(
-                os.path.join(self._segment_dir(s), "docs")), allowMissingColumns=True)
+            df = df.unionByName(self.segment_docs(s), allowMissingColumns=True)
         if not with_tombstones:
             df = self._apply_tombstones(df)
         return df
@@ -587,8 +704,9 @@ class Collection:
         """A1 doc counts + byte sizes per segment (drives vacuum; the
         admin GetSegments parity — the reference returns segment sizes,
         admin.proto / admin_server.rs). ONE Spark job for all segments:
-        segments union with a segment tag column, left join the latest
-        tombstones, one groupBy — not a pair of count jobs per segment."""
+        segments union with a segment tag column, left join the newest
+        tombstone per doc (grouped, so the join cannot duplicate doc
+        rows), one groupBy — not a pair of count jobs per segment."""
         toc = self.toc()
         out: dict = {}
         if toc["segments"]:
@@ -601,11 +719,12 @@ class Collection:
             df = parts[0]
             for p in parts[1:]:
                 df = df.unionByName(p)
-            t = self._tomb_latest().select(
-                F.col("user_id").alias("_tu"), F.col("doc_id").alias("_td"), "tomb_seq"
-            )
+            t = self.tombstones().groupBy(
+                F.col("user_id").alias("_tu"), F.col("doc_id").alias("_td")
+            ).agg(F.max("seq_no").alias("tomb_seq"))
             joined = df.join(
-                t, (df["user_id"] == t["_tu"]) & (df["doc_id"] == t["_td"]), "left"
+                t, (F.col("user_id") == F.col("_tu")) & (F.col("doc_id") == F.col("_td")),
+                "left",
             )
             agg = (
                 joined.groupBy("_seg")
@@ -651,6 +770,7 @@ class Collection:
         )
         remaining = [s for s in toc["segments"] if s not in set(segs)] + [merged]
         self._commit_toc(remaining, toc["flushed_seq_no"], {merged: applied_hi})
+        self._evict(segs)
         self._prune_tombstones()
         return merged
 
@@ -685,6 +805,7 @@ class Collection:
             rewritten.append(new_seg)
         if rewritten:
             self._commit_toc(segments, toc["flushed_seq_no"], applied)
+            self._evict(set(toc["segments"]) - set(segments))
             self._prune_tombstones()
         return rewritten
 
@@ -761,6 +882,7 @@ class Collection:
                 if seg not in referenced:
                     shutil.rmtree(os.path.join(seg_root, seg))
                     removed_segments.append(seg)
+        self._evict(removed_segments)
         return {"versions": removed_versions, "segments": sorted(removed_segments)}
 
     # ------------------------------------------------- durable indexes
@@ -1025,10 +1147,28 @@ class Collection:
         return {s: indexes.get(s, []) for s in toc["segments"]}
 
     def load_segment_index(self, seg: str):
-        """Reopen one segment's persisted IVF index (reader.rs analog)."""
+        """Reopen one segment's persisted IVF index (reader.rs analog).
+        Resolved once per Collection; each caller gets its own shallow
+        copy sharing the cached relations."""
         from muopdb_spark.index.multi_ivf import multi_ivf_load
 
-        return multi_ivf_load(self.spark, self._seg_index_dir(seg, "ivf"))
+        idx = self._cached(
+            ("ivf", seg), lambda: multi_ivf_load(self.spark, self._seg_index_dir(seg, "ivf")))
+        return dataclasses.replace(idx)
+
+    def _centroid_table(self, seg: str, idx) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+        """One segment's centroid table on the driver: (user ids,
+        centroid ids, centroid matrix), collected once per Collection."""
+        def collect():
+            rows = idx.centroids.select("user_id", "centroid_id", "centroid").collect()
+            return (
+                np.array([r["user_id"] for r in rows], dtype=np.int64),
+                np.array([r["centroid_id"] for r in rows], dtype=np.int64),
+                np.array([r["centroid"] for r in rows], dtype=np.float64)
+                .reshape(len(rows), self.config.num_features),
+            )
+
+        return self._cached(("centroids", seg), collect)
 
     def _indexed_segments(self, kind: str, version: int | None = None) -> list[str]:
         toc = self.toc(version)
@@ -1056,12 +1196,21 @@ class Collection:
     ) -> DataFrame:
         """§3.1 ANN search over the DURABLE per-segment per-user indexes:
         the per-user / per-segment loops of snapshot.rs:39-109 collapse
-        into ONE plan — union the TOC's segment index tables tagged by
-        segment, window-probe every (segment, user) group at once,
-        semi-join the probed postings, tombstone-mask seq_no-aware,
-        score (ADC + exact re-rank when quantized), merge top-k.
-        No driver loop over users or segments; at 1,000 users x 50
-        segments this is still one job."""
+        into ONE plan. The probe runs on the driver, over each segment's
+        centroid table collected once per Collection (SPANN's in-memory
+        centroid index): every requested user's probed centroids of a
+        segment become ONE static IN over the postings' (user_id,
+        centroid_id) partition columns, so the scan opens only the
+        probed posting lists — no window, no broadcast semi-join of
+        probed pairs, no centroid scan; a 1,000-user request is still
+        one pruned scan per segment. Then tombstone-mask seq_no-aware, score (ADC +
+        exact re-rank when quantized), merge top-k.
+
+        Spark jobs, measured on the serve benchmark's warm 2-segment
+        collection: 3 for a single-user request, none of them while the
+        DataFrame is built (segment relations, centroid tables and the
+        tombstone relation are all resolved); the first request after
+        a segment appears adds its listing, schema and centroid jobs."""
         from muopdb_spark.functions.distance import score_expr
         from pyspark.sql.window import Window
 
@@ -1074,40 +1223,24 @@ class Collection:
         metric = self.config.metric
         codebook = next(iter(idxs.values())).codebook
 
-        def tagged(dfs: dict[str, DataFrame], pick) -> DataFrame:
-            parts = [pick(ix).withColumn("_seg", F.lit(s)) for s, ix in dfs.items()]
-            out = parts[0]
-            for p in parts[1:]:
-                out = out.unionByName(p)
-            return out
-
         users = [int(u) for u in user_ids]
-        q = F.lit([float(x) for x in query_vector]).cast("array<double>")
-        cents = tagged(idxs, lambda ix: ix.centroids).filter(F.col("user_id").isin(users))
-        scored_c = cents.withColumn("d", score_expr(metric, F.col("centroid"), q))
-        wp = Window.partitionBy("_seg", "user_id").orderBy(
-            F.col("d").asc(), F.col("centroid_id").asc())
-        probed = scored_c.withColumn("rnk", F.row_number().over(wp)).filter(
-            F.col("rnk") <= num_probes)
-        if centroid_distance_ratio is not None:
-            dmin = F.min("d").over(Window.partitionBy("_seg", "user_id"))
-            probed = probed.withColumn("d_min", dmin).filter(
-                F.col("d") - F.col("d_min")
-                <= F.abs(F.col("d_min")) * centroid_distance_ratio)
-        pairs = probed.select("_seg", "user_id", "centroid_id")
-
-        posts = tagged(idxs, lambda ix: ix.postings).filter(F.col("user_id").isin(users))
-        scan = posts.join(F.broadcast(pairs), on=["_seg", "user_id", "centroid_id"],
-                          how="left_semi")
-        # V20, seq_no-aware (tombstones mask only rows at-or-below them)
-        t = self._tomb_latest().select(
-            F.col("user_id").alias("_tu"), F.col("doc_id").alias("_td"), "tomb_seq")
-        scan = scan.join(
-            t,
-            (scan["user_id"] == t["_tu"]) & (scan["id"] == t["_td"])
-            & (scan["seq_no"] <= t["tomb_seq"]),
-            "left_anti",
-        )
+        qv = [float(x) for x in query_vector]
+        q = F.lit(qv).cast("array<double>")
+        key = F.struct("user_id", "centroid_id")
+        parts = []
+        for s, ix in idxs.items():
+            pairs = _probe(self._centroid_table(s, ix), users, qv, metric,
+                           num_probes, centroid_distance_ratio)
+            if pairs:
+                parts.append(ix.postings.filter(key.isin([
+                    F.struct(F.lit(u).alias("user_id"), F.lit(c).alias("centroid_id"))
+                    for u, c in pairs])))
+        if not parts:  # nothing probed: an empty scan with the postings' schema
+            parts = [next(iter(idxs.values())).postings.filter(F.lit(False))]
+        scan = parts[0]
+        for p in parts[1:]:
+            scan = scan.unionByName(p)
+        scan = self._apply_tombstones(scan, users=users, id_col="id")
         if pre_filter_ids is not None:
             scan = scan.join(pre_filter_ids.select("id").distinct(), on="id",
                              how="left_semi")
@@ -1124,10 +1257,9 @@ class Collection:
 
                 # authoritative per-user table lives at the collection
                 # root (a per-segment copy may predate users added by
-                # later segments' codebook extension); swap-aware read
-                # recovers a crashed mid-swap directory
-                codebook = _read_swapped_parquet(
-                    self.spark, os.path.join(self.root, "sq_codebook"))
+                # later segments' codebook extension); the swap-aware
+                # read recovers a crashed mid-swap directory
+                codebook = self._root_table("sq_codebook")
                 scan = scan.join(F.broadcast(codebook), "user_id")
                 adc = sq_est_score_cols(
                     query_vector, F.col("mins"), F.col("scales")
@@ -1141,8 +1273,7 @@ class Collection:
                 # same authoritative-root contract as sq; only the
                 # REQUESTED users' books are collected (driver cost
                 # bounded by the request's user list)
-                codebook = _read_swapped_parquet(
-                    self.spark, os.path.join(self.root, "pq_codebook"))
+                codebook = self._root_table("pq_codebook")
                 books = collect_pq_books(codebook, users)
                 adc = pq_adc_score_per_user(query_vector, books)
             elif quant0 == "opq_user":
@@ -1152,8 +1283,7 @@ class Collection:
                 )
 
                 # same authoritative-root contract as sq/pq_user
-                codebook = _read_swapped_parquet(
-                    self.spark, os.path.join(self.root, "opq_codebook"))
+                codebook = self._root_table("opq_codebook")
                 books = collect_opq_books(codebook, users)
                 adc = opq_adc_score_per_user(query_vector, books)
             elif quant0 == "opq":
@@ -1209,9 +1339,7 @@ class Collection:
         (snapshot.rs:141-146)."""
         segs = self._indexed_segments("terms", version)
         users = [int(u) for u in user_ids]
-        parts = [
-            self.spark.read.parquet(self._seg_index_dir(s, "terms")) for s in segs
-        ]
+        parts = [self._segment_table(s, os.path.join("index", "terms")) for s in segs]
         index = parts[0]
         for p in parts[1:]:
             index = index.unionByName(p)

@@ -682,3 +682,187 @@ def test_seq_claims_dir_not_name_nested(col, spark, tmp_path):
     legacy = tmp_path / "test_col" / "test_col" / "seq_claims"
     legacy.mkdir(parents=True)
     assert col._seq_claims_dir() == str(legacy)
+
+
+def _reads(c):
+    """One ann_search / search / term_search_indexed of user 0 and 1."""
+    q = [1.0, 0.0, 0.0, 0.0]
+    ann = c.ann_search([0, 1], q, 5, num_probes=c.config.num_centroids,
+                       centroid_distance_ratio=None)
+    return (
+        [(r["user_id"], r["id"], r["score"]) for r in ann.collect()],
+        [(r["doc_id"], r["score"]) for r in c.search([0, 1], q, 5).collect()],
+        [r["doc_id"] for r in c.term_search_indexed([0, 1], [("title", "run")], 10).collect()],
+    )
+
+
+def test_repeat_reads_start_no_jobs_while_building(col, spark):
+    """Segment relations, centroid tables and the tombstone relation are
+    resolved once per Collection: building the DataFrame of a repeat
+    request on an unchanged collection starts no Spark job at all."""
+    col.insert(_docs_df(spark, R1)); col.flush()
+    col.insert(_docs_df(spark, R2)); col.flush()
+    col.build_index()
+    col.remove([0], [2])
+    q = [1.0, 0.0, 0.0, 0.0]
+    calls = {
+        "ann_search": lambda: col.ann_search([0, 1], q, 3),
+        "search": lambda: col.search([0, 1], q, 3),
+        "term_search_indexed": lambda: col.term_search_indexed([0, 1], [("title", "run")], 10),
+    }
+    sc = spark.sparkContext
+    for name, build in calls.items():
+        first = build().collect()
+        sc.setJobGroup(f"construct-{name}", name)
+        try:
+            df = build()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert sc.statusTracker().getJobIdsForGroup(f"construct-{name}") == [], name
+        assert df.collect() == first, name
+
+
+def test_read_cache_never_stale(col, spark, tmp_path):
+    """Every write is visible to the next read of the same Collection, of
+    a second Collection on the same directory, and equal to what a
+    freshly opened Collection reads."""
+    col.insert(_docs_df(spark, R1)); col.flush()
+    col.insert(_docs_df(spark, R2)); col.flush()
+    col.build_index()
+    other = Collection.open(spark, str(tmp_path), "test_col")
+    ann, exact, term = _reads(col)
+    assert [i for _, i, _ in ann] == [1, 4, 5, 2, 3] and term == [1, 5]
+    assert _reads(other) == (ann, exact, term)
+    # remove hides the doc, on this handle and on the other one
+    col.remove([0], [1])
+    ann, exact, term = _reads(col)
+    assert 1 not in [i for _, i, _ in ann] and 1 not in [d for d, _ in exact]
+    assert term == [5]
+    assert _reads(other) == (ann, exact, term)
+    # a re-insert after the remove is visible again
+    other.insert(_docs_df(spark, [R1[0]])); other.flush(); other.build_index()
+    ann, exact, term = _reads(col)
+    assert [i for _, i, _ in ann][:1] == [1] and [d for d, _ in exact][:1] == [1]
+    assert term == [1, 5]
+    col.remove([1], [3])
+    # after each maintenance call: equal to a fresh open, on both handles
+    for step, index in ((col.vacuum, col.build_index), (other.merge_segments, other.build_index),
+                        (lambda: col.gc_versions(keep_latest=1), lambda: None)):
+        step()
+        index()
+        fresh = Collection.open(spark, str(tmp_path), "test_col")
+        assert _reads(col) == _reads(other) == _reads(fresh)
+    assert len(col.toc()["segments"]) == 1
+    assert {k[1] for k in col._cache} <= set(col.toc()["segments"]) | {
+        "tombstones", "sq_codebook", "pq_codebook", "opq_codebook"}
+
+
+def test_read_cache_shared_across_threads(col, spark, tmp_path):
+    """More threads than cores race one cold Collection's read cache
+    under a short switch interval: every thread reads what a single
+    thread reads, and each artifact ends up cached once."""
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    col.insert(_docs_df(spark, R1)); col.flush()
+    col.insert(_docs_df(spark, R2)); col.flush()
+    col.build_index()
+    col.remove([0], [2])
+    want = _reads(col)
+    cold = Collection.open(spark, str(tmp_path), "test_col")
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        with ThreadPoolExecutor(max_workers=8) as ex:
+            futures = [ex.submit(_reads, cold) for _ in range(8)]
+            got = [f.result(timeout=600) for f in futures]
+    finally:
+        sys.setswitchinterval(interval)
+    assert got == [want] * 8
+    assert set(cold._cache) == set(col._cache)
+
+
+def _window_pairs(spark, cents, q, metric, num_probes, ratio):
+    """The Spark window probe the driver-side probe replaced."""
+    from pyspark.sql.window import Window
+
+    from muopdb_spark.functions.distance import score_expr
+
+    scored = cents.withColumn(
+        "d", score_expr(metric, F.col("centroid"), F.lit(q).cast("array<double>")))
+    w = Window.partitionBy("_seg", "user_id").orderBy(F.col("d").asc(), F.col("centroid_id").asc())
+    probed = scored.withColumn("rnk", F.row_number().over(w)).filter(F.col("rnk") <= num_probes)
+    if ratio is not None:
+        dmin = F.min("d").over(Window.partitionBy("_seg", "user_id"))
+        probed = probed.withColumn("d_min", dmin).filter(
+            F.col("d") - F.col("d_min") <= F.abs(F.col("d_min")) * ratio)
+    return {(r["_seg"], r["user_id"], r["centroid_id"]) for r in probed.collect()}, scored
+
+
+@pytest.mark.parametrize("metric", ["l2", "dot", "cosine"])
+def test_driver_probe_matches_spark_window(spark, metric):
+    """The driver-side probe picks exactly the (segment, user, centroid)
+    set of the Spark window, including planted ties (duplicate centroids,
+    broken by centroid_id) and rows sitting exactly on the ratio
+    boundary; its distances are bit-equal to score_expr's."""
+    import numpy as np
+
+    from muopdb_spark.catalog.collection import _centroid_distances, _probe
+
+    rng = np.random.default_rng(3)
+    rows = []
+    for seg in ("s0", "s1"):
+        for u in range(5):
+            c = rng.normal(size=(6, 4)).round(2)
+            c[3] = c[1]  # planted tie
+            if u == 0:  # d = 2, then 3 twice: exactly on the ratio-0.5 boundary
+                c[:, 1:] = 0.0
+                c[:, 0] = [2.0, 3.0, 3.0, 3.0000000000000004, 5.0, 7.0]
+            rows += [(seg, u, i, [float(x) for x in v]) for i, v in enumerate(c)]
+    cents = spark.createDataFrame(rows, "_seg string, user_id long, centroid_id int, centroid array<double>")
+    q = {"l2": [0.0] * 4, "dot": [-1.0, 0.0, 0.0, 0.0], "cosine": [1.0, 0.5, -0.25, 0.0]}[metric]
+    tables = {
+        seg: (np.array([r[1] for r in rows if r[0] == seg]),
+              np.array([r[2] for r in rows if r[0] == seg]),
+              np.array([r[3] for r in rows if r[0] == seg]))
+        for seg in ("s0", "s1")
+    }
+    users = [0, 1, 2, 4]
+    for num_probes, ratio in [(6, None), (2, None), (6, 0.5), (3, 0.1), (0, 0.5)]:
+        want, scored = _window_pairs(
+            spark, cents.filter(F.col("user_id").isin(users)), q, metric, num_probes, ratio)
+        got = {(seg, u, c) for seg, t in tables.items()
+               for u, c in _probe(t, users, q, metric, num_probes, ratio)}
+        assert got == want, (num_probes, ratio)
+    d_spark = {(r["_seg"], r["user_id"], r["centroid_id"]): r["d"] for r in scored.collect()}
+    for seg, (uid, cid, c) in tables.items():
+        d = _centroid_distances(metric, c, np.asarray(q))
+        for u, i, x in zip(uid, cid, d):
+            if (seg, u, i) in d_spark:
+                assert d_spark[(seg, u, i)] == x  # bit-equal, not approximately
+    if metric != "cosine":  # d = 3 against d_min = 2 is kept, the next float up is not
+        assert _probe(tables["s0"], [0], q, metric, 6, 0.5) == [(0, 0), (0, 1), (0, 2)]
+
+
+def test_many_user_plan_is_one_pruned_postings_scan(spark, tmp_path):
+    """A 50-user ann_search plans one statically partition-pruned
+    postings scan per segment: no window, no centroid scan (so no
+    broadcast of centroids), and the probed pairs as a single IN rather
+    than an OR chain."""
+    c = Collection.create(spark, str(tmp_path), CollectionConfig(
+        name="many", num_features=2, num_centroids=2))
+    rows = [(u, u * 10 + i, [float(u), float(i)]) for u in range(50) for i in range(4)]
+    c.insert(spark.createDataFrame(rows, "user_id long, doc_id long, vector array<float>"))
+    c.flush()
+    c.build_index()
+    df = c.ann_search(list(range(50)), [1.0, 1.0], 5)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "Window" not in plan and "BroadcastExchange" not in plan
+    assert "/centroids" not in plan
+    scans = [ln for ln in plan.splitlines() if "FileScan" in ln]
+    assert len(scans) == 1, plan  # the postings: no tombstones, no centroids
+    part = scans[0].split("PartitionFilters: [", 1)[1].split("], PushedFilters", 1)[0]
+    assert part.startswith("struct(user_id, user_id#") and "centroid_id" in part, part
+    assert " OR " not in part, part
+    got = df.collect()
+    assert len(got) == 5 and got[0]["id"] in (10, 11)  # user 1's (1, 0)/(1, 1) docs

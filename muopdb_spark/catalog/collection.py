@@ -36,6 +36,7 @@ segment. Spark-first re-expression (SURVEY.md §1.1, §2.1, §2.9):
 from __future__ import annotations
 
 import dataclasses
+import functools
 import json
 import os
 import tempfile
@@ -46,6 +47,8 @@ from dataclasses import asdict, dataclass, field
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from muopdb_spark.sql import distance_sql, sql_array, sql_in, sql_string
 
 
 @dataclass
@@ -334,10 +337,12 @@ class Collection:
         return value
 
     def _evict(self, segs) -> None:
-        """Drop the cached artifacts of segments that left the TOC."""
+        """Drop the cached artifacts of segments that left the TOC, and
+        every view over a segment tuple that holds one of them."""
         gone = set(segs)
         with self._cache_lock:
-            for key in [k for k in self._cache if k[1] in gone]:
+            for key in [k for k in self._cache
+                        if gone.intersection(k[1] if isinstance(k[1], tuple) else (k[1],))]:
                 del self._cache[key]
 
     def _segment_table(self, seg: str, sub: str) -> DataFrame:
@@ -551,6 +556,12 @@ class Collection:
         """The tombstone log as of its current file listing. The
         relation is resolved once per listing, and a relation keeps the
         files it listed, so a caller holding it holds a snapshot."""
+        return self._tomb_snapshot()[1]
+
+    def _tomb_snapshot(self) -> tuple[tuple[str, ...], DataFrame]:
+        """(file listing, relation) of the tombstone log. The listing is
+        taken first, so a view stamped with it is never built from an
+        older log than its stamp says."""
         self._recover_tombstones()
         d = self._tombstone_dir()
         files = _parquet_files(d)
@@ -564,7 +575,7 @@ class Collection:
                 F.lit(None).cast("long").alias(c) for c in ("user_id", "doc_id", "seq_no")
             ]).filter(F.lit(False))
 
-        return self._cached(("root", "tombstones"), read, stamp=files)
+        return files, self._cached(("root", "tombstones"), read, stamp=files)
 
     def _apply_tombstones(
         self, df: DataFrame, tomb: DataFrame | None = None, *,
@@ -587,16 +598,22 @@ class Collection:
         caller's read — harmless — but the REVERSE (watermark read
         newer than the masking read) would mark a tombstone applied
         without applying it, and the subsequent prune would delete an
-        unapplied deletion (r16 review finding on merge_segments)."""
-        t = (tomb if tomb is not None else self.tombstones()).select(
-            F.col("user_id").alias("_tu"), F.col("doc_id").alias("_td"),
-            F.col("seq_no").alias("_ts"))
+        unapplied deletion (r16 review finding on merge_segments).
+
+        The renamed projection and the join condition are built once per
+        tombstone listing (and id column); a request adds only its user
+        filter."""
+        def mask(tomb):
+            return (tomb.selectExpr("user_id AS _tu", "doc_id AS _td", "seq_no AS _ts"),
+                    F.expr(f"user_id = _tu AND `{id_col}` = _td AND seq_no <= _ts"))
+
+        if tomb is None:
+            files, tomb = self._tomb_snapshot()
+            t, cond = self._cached(("mask", id_col), lambda: mask(tomb), stamp=files)
+        else:
+            t, cond = mask(tomb)
         if users is not None:
-            t = t.filter(F.col("_tu").isin(users))
-        cond = (
-            (F.col("user_id") == F.col("_tu")) & (F.col(id_col) == F.col("_td"))
-            & (F.col("seq_no") <= F.col("_ts"))
-        )
+            t = t.filter(sql_in("_tu", users))
         return df.join(t, cond, "left_anti")
 
     # ----------------------------------------------------------- flush
@@ -648,20 +665,29 @@ class Collection:
     def segment_docs(self, seg: str) -> DataFrame:
         return self._segment_table(seg, "docs")
 
+    def _union(self, segs: tuple[str, ...]) -> DataFrame:
+        """The docs of `segs`, unioned by name, once per segment tuple."""
+        def build():
+            df = self.segment_docs(segs[0])
+            for s in segs[1:]:
+                df = df.unionByName(self.segment_docs(s), allowMissingColumns=True)
+            return df
+
+        return self._cached(("union", segs), build)
+
     def docs(self, version: int | None = None, with_tombstones: bool = False) -> DataFrame:
         """All flushed docs at a TOC version (MVCC snapshot read), with
-        tombstones anti-joined unless asked otherwise (V20)."""
-        toc = self.toc(version)
-        segs = toc["segments"]
+        tombstones anti-joined unless asked otherwise (V20). The masked
+        union is built once per (segment tuple, tombstone listing)."""
+        segs = tuple(self.toc(version)["segments"])
         if not segs:
             empty = "user_id long, doc_id long, vector array<float>, seq_no long"
             return self.spark.createDataFrame([], empty)
-        df = self.segment_docs(segs[0])
-        for s in segs[1:]:
-            df = df.unionByName(self.segment_docs(s), allowMissingColumns=True)
-        if not with_tombstones:
-            df = self._apply_tombstones(df)
-        return df
+        if with_tombstones:
+            return self._union(segs)
+        files, _ = self._tomb_snapshot()
+        return self._cached(("masked", segs), lambda: self._apply_tombstones(self._union(segs)),
+                            stamp=files)
 
     def search(self, user_ids, query_vector, k, *, pre_filter=None, version=None) -> DataFrame:
         """§3.1 Search over all flushed segments: the per-segment /
@@ -751,9 +777,7 @@ class Collection:
         segs = seg_names if seg_names is not None else toc["segments"]
         if not segs:
             return ""
-        df = self.segment_docs(segs[0])
-        for s in segs[1:]:
-            df = df.unionByName(self.segment_docs(s), allowMissingColumns=True)
+        df = self._union(tuple(segs))
         # one tombstone snapshot for BOTH the masking join and the
         # applied watermark: the watermark must never exceed what the
         # rewrite actually applied (a concurrent remove() between two
@@ -1207,11 +1231,14 @@ class Collection:
         exact re-rank when quantized), merge top-k.
 
         Spark jobs, measured on the serve benchmark's warm 2-segment
-        collection: 3 for a single-user request, none of them while the
-        DataFrame is built (segment relations, centroid tables and the
-        tombstone relation are all resolved); the first request after
-        a segment appears adds its listing, schema and centroid jobs."""
-        from muopdb_spark.functions.distance import score_expr
+        collection: 3 for a single-user request (7 for a hybrid one, a
+        4-job term search feeding pre_filter_ids), none of them while
+        the DataFrame is built (segment relations, centroid tables and
+        the tombstone mask are all resolved); the first request after a
+        segment appears adds its listing, schema and centroid jobs. The
+        query vector, the user list and the probed pairs are each one
+        SQL text, so building the plan takes the same number of
+        driver->JVM calls whatever the dimension or number of users."""
         from pyspark.sql.window import Window
 
         if num_probes is None:
@@ -1225,27 +1252,25 @@ class Collection:
 
         users = [int(u) for u in user_ids]
         qv = [float(x) for x in query_vector]
-        q = F.lit(qv).cast("array<double>")
-        key = F.struct("user_id", "centroid_id")
         parts = []
         for s, ix in idxs.items():
             pairs = _probe(self._centroid_table(s, ix), users, qv, metric,
                            num_probes, centroid_distance_ratio)
             if pairs:
-                parts.append(ix.postings.filter(key.isin([
-                    F.struct(F.lit(u).alias("user_id"), F.lit(c).alias("centroid_id"))
-                    for u, c in pairs])))
+                probed = ", ".join(f"named_struct('user_id', {u}, 'centroid_id', {c})"
+                                   for u, c in pairs)
+                parts.append(ix.postings.filter(f"struct(user_id, centroid_id) IN ({probed})"))
         if not parts:  # nothing probed: an empty scan with the postings' schema
-            parts = [next(iter(idxs.values())).postings.filter(F.lit(False))]
+            parts = [next(iter(idxs.values())).postings.filter("false")]
         scan = parts[0]
         for p in parts[1:]:
             scan = scan.unionByName(p)
         scan = self._apply_tombstones(scan, users=users, id_col="id")
         if pre_filter_ids is not None:
-            scan = scan.join(pre_filter_ids.select("id").distinct(), on="id",
-                             how="left_semi")
+            # a semi join never repeats a left row: no distinct needed
+            scan = scan.join(pre_filter_ids.select("id"), on="id", how="left_semi")
 
-        exact = score_expr(metric, F.col("vector"), q)
+        exact = distance_sql(metric, "CAST(vector AS ARRAY<DOUBLE>)", sql_array(qv))
         if codebook is not None:
             quant0 = next(iter(idxs.values())).quantizer
             if quant0 == "rabitq":
@@ -1303,17 +1328,16 @@ class Collection:
                 .withColumn("crnk", F.row_number().over(wu))
                 .filter(F.col("crnk") <= (rerank if rerank is not None else k))
             )
-            score = exact if rerank is not None else F.col("adc")
+            score = F.expr(exact) if rerank is not None else F.col("adc")
             if score_decimals is not None:
                 score = F.round(score, score_decimals)
             deduped = cand.select("user_id", "id", score.alias("score"))
         else:
-            score = exact
             if score_decimals is not None:
-                score = F.round(score, score_decimals)
+                exact = f"round({exact}, {int(score_decimals)})"
             deduped = (
-                scan.select("user_id", "id", score.alias("score"))
-                .groupBy("user_id", "id").agg(F.min("score").alias("score"))
+                scan.selectExpr("user_id", "id", f"{exact} AS score")
+                .groupBy("user_id", "id").agg(F.expr("min(score) AS score"))
             )
         if per_user:
             w = Window.partitionBy("user_id").orderBy(
@@ -1324,50 +1348,68 @@ class Collection:
                 .select("user_id", "id", "score")
                 .orderBy("user_id", F.col("score").asc_nulls_last(), "id")
             )
-        return (
-            deduped.orderBy(F.col("score").asc_nulls_last(), F.col("id").asc())
-            .limit(k)
-            .select("user_id", "id", "score")
-        )
+        return deduped.orderBy(F.col("score").asc_nulls_last(), F.col("id").asc()).limit(k)
+
+    def _term_postings(self, segs: tuple[str, ...]) -> DataFrame:
+        """The term indexes of `segs` as one (_seg, user_id, field, term,
+        doc_id) relation of exploded postings, once per segment tuple. A
+        request's filter on user_id, field and term is pushed below the
+        explode into each segment's scan. The explode sits above the
+        union, so a join on doc_id stays one join over all segments
+        rather than one per segment."""
+        def build():
+            parts = [
+                self._segment_table(s, os.path.join("index", "terms")).selectExpr(
+                    f"{sql_string(s)} AS _seg", "user_id", "field", "term", "postings")
+                for s in segs
+            ]
+            return functools.reduce(lambda a, b: a.unionByName(b), parts).selectExpr(
+                "_seg", "user_id", "field", "term", "explode(postings) AS doc_id")
+
+        return self._cached(("terms", segs), build)
+
+    def _visible_ids(self, segs: tuple[str, ...]) -> DataFrame:
+        """(_vseg, _vu, _vd): the segment, user and id of every doc row
+        of `segs` that no tombstone masks, once per (segment tuple,
+        tombstone listing)."""
+        def build():
+            parts = [
+                self.segment_docs(s).selectExpr(
+                    f"{sql_string(s)} AS _vseg", "user_id", "doc_id", "seq_no")
+                for s in segs
+            ]
+            masked = self._apply_tombstones(functools.reduce(lambda a, b: a.unionByName(b), parts))
+            return masked.selectExpr("_vseg", "user_id AS _vu", "doc_id AS _vd")
+
+        files, _ = self._tomb_snapshot()
+        return self._cached(("visible", segs), build, stamp=files)
 
     def term_search_indexed(self, user_ids, terms, limit: int, *, mode: str = "and",
                             version: int | None = None) -> DataFrame:
         """§3.2 TermSearch over the DURABLE per-segment term indexes
-        (terms/writer.rs on-disk layout analog): union the segments'
-        term tables, filter to the queried (field, term) pairs, explode
-        postings, intersect/union, dedup across segments, sort + limit
-        (snapshot.rs:141-146)."""
-        segs = self._indexed_segments("terms", version)
-        users = [int(u) for u in user_ids]
-        parts = [self._segment_table(s, os.path.join("index", "terms")) for s in segs]
-        index = parts[0]
-        for p in parts[1:]:
-            index = index.unionByName(p)
-        index = index.filter(F.col("user_id").isin(users))
-        cond = None
-        for f_, t_ in terms:
-            c = (F.col("field") == f_) & (F.col("term") == t_)
-            cond = c if cond is None else (cond | c)
-        if cond is None:
+        (terms/writer.rs on-disk layout analog): filter the segments'
+        exploded postings to the queried (field, term) pairs, keep the
+        postings whose own segment still holds a live row of the doc,
+        intersect (and: every distinct queried pair present, one
+        aggregate) or union (or), sort + limit (snapshot.rs:141-146).
+
+        Visibility is per segment, as the reference evaluates each
+        segment's term iterator against that segment's own invalidated
+        set: a doc removed and re-inserted into a newer segment matches
+        only the terms of its new version."""
+        from muopdb_spark.index.terms import combine_hits, match_terms
+
+        segs = tuple(self._indexed_segments("terms", version))
+        pairs, match = match_terms(terms)
+        if not pairs:
             return self.spark.createDataFrame([], "doc_id long")
-        matched = index.filter(cond).select(
-            "user_id", "field", "term", F.explode("postings").alias("doc_id"))
-        if mode == "and":
-            hits = (
-                matched.groupBy("user_id", "doc_id")
-                .agg(F.countDistinct("field", "term").alias("n"))
-                .filter(F.col("n") == len(terms))
-                .select("user_id", "doc_id")
-            )
-        else:
-            hits = matched.select("user_id", "doc_id").distinct()
-        # visibility = the docs table's (seq_no-aware tombstone-masked)
-        # view; index postings carry no seq_no, so the mask is a semi
-        # join against the masked doc ids (2-column pruned scan)
+        users = [int(u) for u in user_ids]
+        hits = self._term_postings(segs).filter(f"{sql_in('user_id', users)} AND ({match})")
+        # a semi join never repeats a left row: no distinct on the ids
         hits = hits.join(
-            self.docs(version=version).select("user_id", "doc_id").distinct(),
-            on=["user_id", "doc_id"], how="left_semi",
-        )
+            self._visible_ids(segs).filter(sql_in("_vu", users)),
+            F.expr("_seg = _vseg AND user_id = _vu AND doc_id = _vd"), "left_semi")
+        hits = combine_hits(hits, ["user_id", "doc_id"], len(pairs), mode)
         return hits.orderBy("doc_id").limit(limit)
 
     def build_quantizer(self, num_subvectors: int = 4, num_centers: int = 16):
@@ -1387,12 +1429,10 @@ class Collection:
     def search_pq(self, codebook, user_ids, query_vector, k) -> DataFrame:
         """PQ-scored search: encode the (user-pruned, tombstone-masked)
         docs and rank by asymmetric distance."""
-        from pyspark.sql import functions as SF
-
         from muopdb_spark.index.pq import pq_encode, pq_search
 
         docs = self.docs()
         if user_ids is not None:
-            docs = docs.filter(SF.col("user_id").isin(list(user_ids)))
+            docs = docs.filter(sql_in("user_id", user_ids))
         enc = pq_encode(docs, codebook, vec_col="vector")
         return pq_search(enc, query_vector, codebook, k, id_col="doc_id")

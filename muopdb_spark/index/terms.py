@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from muopdb_spark.functions.text import simple_tokens, stemmed_tokens
+from muopdb_spark.sql import sql_string
 
 
 def build_term_index(
@@ -96,6 +97,29 @@ def term_lookup(index: DataFrame, field: str, term: str) -> DataFrame:
     return index.filter((F.col("field") == field) & (F.col("term") == term))
 
 
+def match_terms(terms) -> tuple[list[tuple[str, str]], str]:
+    """The distinct queried (field, term) pairs, sorted, and one SQL
+    condition matching exactly those pairs (one Py4J round trip to
+    build, whatever the number of terms)."""
+    pairs = sorted({(f, t) for f, t in terms})
+    return pairs, " OR ".join(
+        f"(field = {sql_string(f)} AND term = {sql_string(t)})" for f, t in pairs)
+
+
+def combine_hits(matched: DataFrame, keys: list[str], n_pairs: int, mode: str) -> DataFrame:
+    """The `keys` of the `matched` posting rows (field, term, *keys)
+    that hold all `n_pairs` distinct queried pairs (and: one aggregate,
+    so one shuffle) or any of them (or)."""
+    if mode == "and":
+        return (
+            matched.groupBy(*keys)
+            .agg(F.expr("size(collect_set(struct(field, term))) AS n"))
+            .filter(f"n = {n_pairs}")
+            .select(*keys)
+        )
+    return matched.select(*keys).distinct()
+
+
 def term_search_indexed(
     index: DataFrame,
     terms: list[tuple[str, str]],
@@ -104,28 +128,14 @@ def term_search_indexed(
     mode: str = "and",
 ) -> DataFrame:
     """TermSearch via the index: fetch the queried terms' index rows
-    (broadcast-sized filter), explode their postings, then AND =
-    count-of-matched-terms equality (F2's leapfrog intersection as a
+    (broadcast-sized filter), explode their postings, then AND = every
+    distinct queried pair matched (F2's leapfrog intersection as a
     groupBy) or OR = distinct union (F3), sorted + limited
     (snapshot.rs:141-146). Fully distributed — only the queried terms'
     postings are ever materialized."""
     if not terms:
         # empty term list matches nothing (planner.rs:124-148 semantics)
         return index.sparkSession.createDataFrame([], "doc_id long")
-    cond = None
-    for f, t in terms:
-        c = (F.col("field") == f) & (F.col("term") == t)
-        cond = c if cond is None else (cond | c)
-    matched = index.filter(cond).select(
-        "field", "term", F.explode("postings").alias("doc_id")
-    )
-    if mode == "and":
-        hits = (
-            matched.groupBy("doc_id")
-            .agg(F.countDistinct("field", "term").alias("n_terms"))
-            .filter(F.col("n_terms") == len(terms))
-            .select("doc_id")
-        )
-    else:
-        hits = matched.select("doc_id").distinct()
-    return hits.orderBy("doc_id").limit(limit)
+    pairs, match = match_terms(terms)
+    matched = index.filter(match).selectExpr("field", "term", "explode(postings) AS doc_id")
+    return combine_hits(matched, ["doc_id"], len(pairs), mode).orderBy("doc_id").limit(limit)

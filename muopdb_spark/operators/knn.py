@@ -25,6 +25,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from muopdb_spark.functions.distance import score_expr
+from muopdb_spark.sql import distance_sql, sql_array, sql_in
 
 
 def _nan_last(score: Column) -> Column:
@@ -49,18 +50,21 @@ def knn(
     extra_cols: Sequence[str] = (),
     score_decimals: int | None = None,
 ) -> DataFrame:
-    """Exact top-k by distance. Returns (id_col, *extra_cols, score)."""
-    q = F.lit([float(x) for x in query_vector]).cast("array<double>")
+    """Exact top-k by distance. Returns (id_col, *extra_cols, score).
 
+    The user list and the scored query are each one SQL text, so the
+    number of driver->JVM calls that build the plan does not grow with
+    the vector's dimension or the number of users."""
     if user_ids is not None:
-        df = df.filter(F.col(user_col).isin(list(user_ids)))
+        df = df.filter(sql_in(f"`{user_col}`", user_ids))
     if pre_filter is not None:
         df = df.filter(pre_filter)
     if tombstones is not None:
         join_keys = [id_col] + ([user_col] if user_col in tombstones.columns else [])
         df = df.join(tombstones.select(*join_keys).distinct(), on=join_keys, how="left_anti")
 
-    score = score_expr(metric, F.col(vector_col), q)
+    score = F.expr(distance_sql(
+        metric, f"CAST(`{vector_col}` AS ARRAY<DOUBLE>)", sql_array(query_vector)))
     if score_decimals is not None:
         score = F.round(score, score_decimals)
     scored = df.select(id_col, *extra_cols, score.alias("score"))

@@ -15,9 +15,16 @@ kinds of capability:
 
 `register_tables` mounts the fixture/collection parquet as temp views
 so an analyst can work entirely in SQL.
+
+The `sql_*` literal builders serve the engine's own request paths: a
+request literal written as SQL text reaches the JVM as one string, one
+Py4J round trip, where building it Column by Column costs several
+round trips per element.
 """
 
 from __future__ import annotations
+
+import math
 
 import pandas as pd
 from pyspark.sql import SparkSession
@@ -44,6 +51,39 @@ def distance_sql(metric: str, a: str, b: str) -> str:
     if metric == "cosine":
         return f"1.0D - ({dot}) / ({norm.format(a)} * {norm.format(b)})"
     raise ValueError(f"unknown metric {metric!r}")
+
+
+def sql_string(s: str) -> str:
+    """A string literal equal to `s`: with the parser's default escape
+    processing, only the backslash and the quote need escaping (so
+    `\\%`, `\\_` and `\\u0041` in `s` stay literal text)."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def _json_double(x: float) -> str:
+    if math.isnan(x):
+        return '"NaN"'
+    if math.isinf(x):
+        return '"Infinity"' if x > 0 else '"-Infinity"'
+    return repr(x)  # the shortest decimal that parses back to x
+
+
+def sql_array(values) -> str:
+    """An array<double> literal of `values`, bit-exact (-0.0, subnormals,
+    NaN and the infinities included). It is one JSON string that
+    constant folding turns into one array literal: an array(...) call
+    would give the analyzer one node per element to resolve (~100 ms at
+    768 elements), this gives it one whatever the length."""
+    body = ",".join(_json_double(float(x)) for x in values)
+    return f"from_json('[{body}]', 'array<double>')"
+
+
+def sql_in(col: str, values) -> str:
+    """`col IN (...)` over integer `values`; an empty list matches
+    nothing, as Column.isin([]) does in a filter."""
+    if not values:
+        return "false"
+    return f"{col} IN ({', '.join(str(int(v)) for v in values)})"
 
 
 def register_functions(spark: SparkSession) -> None:

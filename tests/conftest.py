@@ -24,3 +24,34 @@ def sf_dir() -> str:
     # not the 10x-smaller sf0.001 it used through r14. Override via
     # SPARK_GRAFT_TEST_SF_DIR for a quick local iteration loop.
     return os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.01")
+
+
+@pytest.fixture()
+def round_trips(spark):
+    """round_trips(build) -> the Py4J round trips `build()` makes, not
+    counting object releases, with the cyclic collector off so that a
+    release of an unrelated object cannot land in the count."""
+    import gc
+
+    client = spark.sparkContext._gateway._gateway_client
+
+    def count(build) -> int:
+        send = client.send_command
+        n = [0]
+
+        def counting(cmd, *a, **kw):
+            if not cmd.startswith("m\n"):
+                n[0] += 1
+            return send(cmd, *a, **kw)
+
+        gc.collect()
+        gc.disable()
+        client.send_command = counting
+        try:
+            build()
+        finally:
+            client.send_command = send
+            gc.enable()
+        return n[0]
+
+    return count

@@ -685,15 +685,31 @@ def test_seq_claims_dir_not_name_nested(col, spark, tmp_path):
 
 
 def _reads(c):
-    """One ann_search / search / term_search_indexed of user 0 and 1."""
+    """One ann_search / search / term_search_indexed (AND, then OR) /
+    hybrid request of user 0 and 1, plus the docs() view."""
     q = [1.0, 0.0, 0.0, 0.0]
     ann = c.ann_search([0, 1], q, 5, num_probes=c.config.num_centroids,
                        centroid_distance_ratio=None)
+    ids = c.term_search_indexed([0, 1], [("title", "run"), ("category", "news")], 10,
+                                mode="or").select(F.col("doc_id").alias("id"))
+    hybrid = c.ann_search([0, 1], q, 5, num_probes=c.config.num_centroids,
+                          centroid_distance_ratio=None, pre_filter_ids=ids)
     return (
         [(r["user_id"], r["id"], r["score"]) for r in ann.collect()],
         [(r["doc_id"], r["score"]) for r in c.search([0, 1], q, 5).collect()],
         [r["doc_id"] for r in c.term_search_indexed([0, 1], [("title", "run")], 10).collect()],
+        [r["id"] for r in hybrid.collect()],
+        sorted(r["doc_id"] for r in c.docs().select("doc_id").collect()),
     )
+
+
+def _cached_segments(c) -> set:
+    """Every segment some cached read artifact or view is built over."""
+    out = set()
+    for kind, name in c._cache:
+        if kind not in ("root", "mask"):
+            out.update(name if isinstance(name, tuple) else (name,))
+    return out
 
 
 def test_repeat_reads_start_no_jobs_while_building(col, spark):
@@ -730,20 +746,24 @@ def test_read_cache_never_stale(col, spark, tmp_path):
     col.insert(_docs_df(spark, R2)); col.flush()
     col.build_index()
     other = Collection.open(spark, str(tmp_path), "test_col")
-    ann, exact, term = _reads(col)
+    ann, exact, term, hybrid, docs = _reads(col)
     assert [i for _, i, _ in ann] == [1, 4, 5, 2, 3] and term == [1, 5]
-    assert _reads(other) == (ann, exact, term)
+    assert hybrid == [1, 5, 3] and docs == [1, 2, 3, 4, 5]
+    # the per-request views are cached: docs(), the masked ids per
+    # segment, the term postings, the tombstone mask per id column
+    assert {"union", "masked", "visible", "terms", "mask"} <= {k[0] for k in col._cache}
+    assert _reads(other) == (ann, exact, term, hybrid, docs)
     # remove hides the doc, on this handle and on the other one
     col.remove([0], [1])
-    ann, exact, term = _reads(col)
+    ann, exact, term, hybrid, docs = _reads(col)
     assert 1 not in [i for _, i, _ in ann] and 1 not in [d for d, _ in exact]
-    assert term == [5]
-    assert _reads(other) == (ann, exact, term)
+    assert term == [5] and 1 not in hybrid and 1 not in docs
+    assert _reads(other) == (ann, exact, term, hybrid, docs)
     # a re-insert after the remove is visible again
     other.insert(_docs_df(spark, [R1[0]])); other.flush(); other.build_index()
-    ann, exact, term = _reads(col)
+    ann, exact, term, hybrid, docs = _reads(col)
     assert [i for _, i, _ in ann][:1] == [1] and [d for d, _ in exact][:1] == [1]
-    assert term == [1, 5]
+    assert term == [1, 5] and hybrid[:1] == [1] and docs == [1, 2, 3, 4, 5]
     col.remove([1], [3])
     # after each maintenance call: equal to a fresh open, on both handles
     for step, index in ((col.vacuum, col.build_index), (other.merge_segments, other.build_index),
@@ -752,8 +772,10 @@ def test_read_cache_never_stale(col, spark, tmp_path):
         index()
         fresh = Collection.open(spark, str(tmp_path), "test_col")
         assert _reads(col) == _reads(other) == _reads(fresh)
+        assert 3 not in _reads(col)[4]
     assert len(col.toc()["segments"]) == 1
-    assert {k[1] for k in col._cache} <= set(col.toc()["segments"]) | {
+    assert _cached_segments(col) <= set(col.toc()["segments"])
+    assert {k[1] for k in col._cache if k[0] == "root"} <= {
         "tombstones", "sq_codebook", "pq_codebook", "opq_codebook"}
 
 
@@ -866,3 +888,209 @@ def test_many_user_plan_is_one_pruned_postings_scan(spark, tmp_path):
     assert " OR " not in part, part
     got = df.collect()
     assert len(got) == 5 and got[0]["id"] in (10, 11)  # user 1's (1, 0)/(1, 1) docs
+
+
+def test_repeated_term_does_not_empty_and_query(col, spark):
+    """AND mode compares each doc's matched pairs with the DISTINCT
+    query pairs: a pair listed twice is still one pair."""
+    col.insert(_docs_df(spark, R1)); col.insert(_docs_df(spark, R2))
+    col.flush()
+    col.build_index()
+    once = col.term_search_indexed([0, 1], [("title", "run")], 10)
+    twice = col.term_search_indexed([0, 1], [("title", "run"), ("title", "run")], 10)
+    assert [r["doc_id"] for r in once.collect()] == [1, 5]
+    assert [r["doc_id"] for r in twice.collect()] == [1, 5]
+    both = [("title", "run"), ("category", "news"), ("title", "run")]
+    assert [r["doc_id"] for r in col.term_search_indexed([0, 1], both, 10).collect()] == [1, 5]
+
+
+@pytest.mark.parametrize("mode", ["and", "or"])
+def test_term_postings_visible_per_segment(col, spark, mode):
+    """A doc removed and re-inserted with new text lands in a newer
+    segment; the old segment's postings of it stay invisible (that
+    segment's own row is masked), and the new version's terms match."""
+    col.insert(_docs_df(spark, R1)); col.flush()
+    col.insert(_docs_df(spark, R2)); col.flush()
+    col.build_index()
+    col.remove([0], [1])
+    col.insert(_docs_df(spark, [(0, 1, [1.0, 0.0, 0.0, 0.0], "slow bread", "blog", 11)]))
+    col.flush()
+    col.build_index()
+    assert len(col.toc()["segments"]) == 3
+
+    def ids(terms):
+        return [r["doc_id"] for r in col.term_search_indexed([0, 1], terms, 10, mode=mode).collect()]
+
+    assert ids([("title", "fast")]) == []                       # only the removed version had it
+    assert ids([("title", "run")]) == [5]
+    assert ids([("title", "bread")]) == [1]
+    assert ids([("title", "slow")]) == [1, 2]
+    assert ids([("title", "fast"), ("category", "news")]) == ([] if mode == "and" else [3, 5])
+    assert ids([("title", "bread"), ("category", "blog")]) == ([1] if mode == "and" else [1, 2, 4])
+
+
+def _serve_like(spark, tmp_path, name, dim):
+    """A 2-segment, 50-user collection with terms and a tombstone."""
+    import numpy as np
+
+    rng = np.random.default_rng(dim)
+    c = Collection.create(spark, str(tmp_path), CollectionConfig(
+        name=name, num_features=dim, num_centroids=2,
+        attribute_schema={"title": "text"}))
+    words = [f"w{i}" for i in range(20)]
+    for b in range(2):
+        rows = [(u, b * 1000 + u * 4 + i, [float(x) for x in rng.normal(size=dim)],
+                 " ".join(words[(u + i + j) % 20] for j in range(3)))
+                for u in range(50) for i in range(2)]
+        c.insert(spark.createDataFrame(rows, "user_id long, doc_id long, vector array<float>, title string"))
+        c.flush()
+    c.build_index()
+    c.remove([0], [0])
+    return c, words
+
+
+def test_request_round_trips_do_not_grow(spark, tmp_path, round_trips):
+    """Building a request's DataFrame costs a number of driver->JVM
+    calls that does not depend on the query's dimension, the number of
+    users or the number of terms, and stays under the counts named for
+    the serve requests (ann 200, term 200, hybrid 500, exact 100)."""
+    small, words = _serve_like(spark, tmp_path, "d32", 32)
+    large, _ = _serve_like(spark, tmp_path, "d768", 768)
+
+    def requests(c, users, terms):
+        q = [0.5] * c.config.num_features
+
+        def hybrid():
+            ids = c.term_search_indexed(users, terms, 1000).select(F.col("doc_id").alias("id"))
+            return c.ann_search(users, q, 10, pre_filter_ids=ids)
+
+        return {
+            "ann": lambda: c.ann_search(users, q, 10),
+            "term": lambda: c.term_search_indexed(users, terms, 50),
+            "hybrid": hybrid,
+            "exact": lambda: c.search(users, q, 10),
+        }
+
+    def counts(c, users, terms):
+        out = {}
+        for kind, build in requests(c, users, terms).items():
+            build().collect()  # warm every cached view first
+            out[kind] = round_trips(build)
+        return out
+
+    one = [("title", words[0])]
+    base = counts(small, [0], one)
+    assert base["ann"] <= 200 and base["term"] <= 200, base
+    assert base["hybrid"] <= 500 and base["exact"] <= 100, base
+    assert counts(large, [0], one) == base
+    many_users = counts(small, list(range(50)), one)
+    many_terms = counts(small, [0], [("title", w) for w in words])
+    for kind, n in base.items():
+        assert many_users[kind] <= n + 5, (kind, many_users, base)
+        assert many_terms[kind] <= n + 5, (kind, many_terms, base)
+
+
+def _old_exact(c, users, q, k):
+    """The exact top-k as the Column builders scored it: F.lit of the
+    query list, lambdas from score_expr."""
+    from muopdb_spark.functions.distance import score_expr
+
+    score = score_expr(c.config.metric, F.col("vector"), F.lit(q).cast("array<double>"))
+    rows = (c.docs().filter(F.col("user_id").isin(users))
+            .select("doc_id", score.alias("score"))
+            .orderBy(F.col("score").asc_nulls_last(), F.col("doc_id").asc()).limit(k).collect())
+    return [(r["doc_id"], r["score"].hex()) for r in rows]
+
+
+@pytest.mark.parametrize("metric", ["l2", "dot", "cosine"])
+def test_query_literal_is_bit_exact(spark, tmp_path, metric):
+    """The one-text query literal scores bit-equal to the Column-built
+    one, for components that a decimal rendering could get wrong: -0.0,
+    a subnormal, 1e308, NaN and the infinities."""
+    c = Collection.create(spark, str(tmp_path), CollectionConfig(
+        name="lit", num_features=4, metric=metric, num_centroids=2))
+    rows = [(u, u * 10 + i, [float(x) for x in v]) for u in range(2) for i, v in enumerate(
+        [[1.0, -2.0, 0.5, 3.0], [0.0, -0.0, 1e-30, 0.0], [1e-3, 7.0, -0.25, 2.0],
+         [3.4e38, -1.0, 1.0, 0.0], [-0.0, 1e-40, 6.5, -3.0]])]
+    c.insert(spark.createDataFrame(rows, "user_id long, doc_id long, vector array<float>"))
+    c.flush()
+    c.build_index()
+    queries = [
+        [-0.0, 5e-324, 1e308, 0.1],
+        [1.0 / 3.0, -0.0, 2.2250738585072014e-308, -7.5],
+        [float("nan"), 1.0, 2.0, 3.0],
+        [float("inf"), 1.0, -1.0, 0.0],
+        [1.0, float("-inf"), 0.0, 2.0],
+    ]
+    for q in queries:
+        want = _old_exact(c, [0, 1], q, 10)
+        got = [(r["doc_id"], r["score"].hex()) for r in c.search([0, 1], q, 10).collect()]
+        assert got == want, q
+        ann = c.ann_search([0, 1], q, 10, num_probes=2, centroid_distance_ratio=None)
+        got = sorted((r["id"], r["score"].hex()) for r in ann.collect())
+        assert got == sorted(want), q
+
+
+def test_term_literals_match_only_themselves(spark, tmp_path):
+    """Keyword terms holding SQL quote, backslash, LIKE wildcards,
+    escape-looking text, non-ASCII text or nothing at all each match
+    exactly the docs that carry that value."""
+    values = ["it's", "a\\b", "50%", "50x", "a_b", "axb", "\\u0041", "A", "x\\%", "naïve 日本", "", "''"]
+    c = Collection.create(spark, str(tmp_path), CollectionConfig(
+        name="kw", num_features=2, num_centroids=1, attribute_schema={"tag": "keyword"}))
+    rows = [(0, i, [float(i), 0.0], v) for i, v in enumerate(values)]
+    rows += [(0, 100 + i, [float(i), 1.0], v) for i, v in enumerate(values[:3])]
+    c.insert(spark.createDataFrame(rows, "user_id long, doc_id long, vector array<float>, tag string"))
+    c.flush()
+    c.build_index()
+    for v in values:
+        want = sorted(d for _, d, _, t in rows if t == v)
+        for mode in ("and", "or"):
+            got = [r["doc_id"] for r in c.term_search_indexed([0], [("tag", v)], 50, mode=mode).collect()]
+            assert got == want, (v, mode)
+
+
+def _semi_join_build_roots(plan: str) -> list[str]:
+    """For every LeftSemi join in a logical plan's tree string, the first
+    operator of its build (right) side below any Project or Filter."""
+    lines = plan.splitlines()
+
+    def depth(line):
+        i = 0
+        while line[i:i + 3] in ("   ", ":  ", "+- ", ":- "):
+            i += 3
+        return i
+
+    roots = []
+    for n, line in enumerate(lines):
+        if "Join LeftSemi" not in line:
+            continue
+        d = depth(line)
+        right = next(i for i in range(n + 1, len(lines))
+                     if depth(lines[i]) == d + 3 and lines[i][d:d + 3] == "+- ")
+        ops = (ln[depth(ln):] for ln in lines[right:])
+        roots.append(next(op for op in ops if not op.startswith(("Project", "Filter"))))
+    return roots
+
+
+def test_term_and_hybrid_plan_shapes(col, spark):
+    """The AND count is one aggregate over one shuffle (no Expand of a
+    two-level countDistinct), no aggregate sits on the build side of a
+    semi join, and the hybrid plan aggregates nothing over the
+    pre-filter ids."""
+    col.insert(_docs_df(spark, R1)); col.flush()
+    col.insert(_docs_df(spark, R2)); col.flush()
+    col.build_index()
+    col.remove([0], [2])
+    term = col.term_search_indexed([0, 1], [("title", "run"), ("category", "news")], 10)
+    physical = term._jdf.queryExecution().executedPlan().toString()
+    assert physical.count("Exchange hashpartitioning") == 1, physical
+    assert "Expand" not in physical, physical
+    assert "collect_set" in physical
+    ids = term.select(F.col("doc_id").alias("id"))
+    hybrid = col.ann_search([0, 1], [1.0, 0.0, 0.0, 0.0], 5, pre_filter_ids=ids)
+    for df in (term, hybrid):
+        roots = _semi_join_build_roots(df._jdf.queryExecution().optimizedPlan().toString())
+        assert roots and not any(r.startswith("Aggregate") for r in roots), roots
+    assert [r["doc_id"] for r in term.collect()] == [1, 5]
+    assert [r["id"] for r in hybrid.collect()] == [1, 5]

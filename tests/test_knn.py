@@ -108,3 +108,47 @@ def test_knn_property_matches_numpy(spark):
         d32 = np.sqrt(((mat.astype(np.float32).astype(np.float64) - q) ** 2).sum(axis=1))
         expected32 = ids[np.lexsort((ids, d32))][:k].tolist()
         assert got == expected32, f"trial {trial}"
+
+
+def test_knn_round_trips_do_not_grow(spark, round_trips):
+    """The query vector and the user list are each one SQL text: a
+    768-dim query or a 50-user list builds with as many driver->JVM
+    calls as a 32-dim query for one user."""
+    def df(dim):
+        return spark.createDataFrame(
+            [(i, i % 50, [float(i)] * dim) for i in range(100)],
+            "vec_id long, user_id long, embedding array<float>")
+
+    small, large = df(32), df(768)
+
+    def calls(data, dim, users):
+        def build():
+            return knn(data, [0.5] * dim, 10, id_col="vec_id", user_ids=users)
+
+        build()  # first-use lookups on the gateway are not per-request cost
+        return round_trips(build)
+
+    base = calls(small, 32, [0])
+    assert base <= 100
+    assert calls(large, 768, [0]) == base
+    assert calls(small, 32, list(range(50))) == base
+
+
+@pytest.mark.parametrize("metric", ["l2", "dot", "cosine"])
+def test_knn_query_literal_bit_exact(spark, metric):
+    """Scores are bit-equal to the Column-built query literal (F.lit of
+    the list and the score_expr lambdas), including -0.0, subnormal,
+    1e308, NaN and infinite query components."""
+    from muopdb_spark.functions.distance import score_expr
+
+    rows = [(i, [float(x) for x in v]) for i, v in enumerate(
+        [[1.0, -2.0, 0.5], [1e-30, -0.0, 2.0], [3.4e38, 1.0, -1.0], [0.1, 0.2, 0.3]])]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    for q in ([-0.0, 5e-324, 1e308], [1.0 / 3.0, 2.2250738585072014e-308, -7.5],
+              [float("nan"), 1.0, 2.0], [float("inf"), 1.0, -1.0], [1.0, float("-inf"), 0.0]):
+        old = score_expr(metric, F.col("embedding"), F.lit(q).cast("array<double>"))
+        want = [(r["vec_id"], r["score"].hex()) for r in df.select("vec_id", old.alias("score"))
+                .orderBy(F.col("score").asc_nulls_last(), "vec_id").collect()]
+        got = [(r["vec_id"], r["score"].hex())
+               for r in knn(df, q, 4, id_col="vec_id", metric=metric).collect()]
+        assert got == want, q

@@ -41,6 +41,9 @@ def test_keyword_whole_value(index):
 def test_indexed_and_search(index):
     got = term_search_indexed(index, [("title", "run"), ("title", "walk")], 10)
     assert [r["doc_id"] for r in got.collect()] == [4]
+    # a pair listed twice is still one pair to match
+    got = term_search_indexed(index, [("title", "run"), ("title", "walk"), ("title", "run")], 10)
+    assert [r["doc_id"] for r in got.collect()] == [4]
 
 
 def test_indexed_or_search(index):

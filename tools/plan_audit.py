@@ -7,6 +7,8 @@ affecting changes; reviewers read the committed output.
 from __future__ import annotations
 
 import io
+import re
+import shutil
 import sys
 from contextlib import redirect_stdout
 
@@ -317,6 +319,29 @@ CHECKS = {
         ("!ArrowEvalPython", "fully JVM: md5/conv/row_number are "
          "Catalyst expressions, no Python in the plan"),
     ],
+    "serve_ann_search": [
+        ("PartitionFilters: [struct(user_id", "the driver-side probe's "
+         "(user_id, centroid_id) pairs are one static IN over the "
+         "postings' partition columns: the scan opens only the probed "
+         "posting lists"),
+        ("!Window", "no centroid ranking in the plan: the probe ran on "
+         "the driver over the cached centroid table"),
+    ],
+    "serve_term_search_indexed": [
+        ("exchanges == 1", "the AND count is one collect_set aggregate "
+         "over one shuffle; the per-segment visibility test is a "
+         "broadcast semi join, and the docs side needs no distinct"),
+        ("!Expand", "no two-level countDistinct"),
+        ("collect_set", "AND = the distinct queried (field, term) pairs "
+         "a doc matched, counted once"),
+    ],
+    "serve_hybrid": [
+        ("LeftSemi", "the term ids pre-filter the ANN scan as a semi "
+         "join"),
+        ("!Functions: []", "no distinct aggregate anywhere, none over "
+         "the pre-filter ids in particular: a semi join never repeats "
+         "a left row"),
+    ],
     "d8_semdedup": [
         ("FlatMapGroupsInPandas", "within-cluster pairs are one BLAS "
          "block matmul per cluster — vectors shuffle once, grouped "
@@ -341,8 +366,6 @@ def _plan_profile(plan: str) -> dict[str, int]:
     exactly once as a detail header "(n) OpName". (Codegen spans are
     not visible pre-execution under AQE, so they are not counted
     here; the per-query CHECKS assert the Python-eval shape instead.)"""
-    import re
-
     def ops(name: str) -> int:
         return len(re.findall(rf"^\(\d+\) {name}\b", plan, re.MULTILINE))
 
@@ -358,14 +381,52 @@ def _plan_profile(plan: str) -> dict[str, int]:
     }
 
 
+def _serve_requests(spark, root: str) -> dict:
+    """The serve benchmark's request shapes (perfbench/serve.py) over a
+    small collection of the same layout: 2 indexed segments, 8 users,
+    32-dim vectors, text titles, and tombstones for 10% of the docs."""
+    import numpy as np
+    from pyspark.sql import functions as F
+
+    from muopdb_spark.catalog import Collection, CollectionConfig
+
+    rng = np.random.default_rng(0)
+    words = "spark stream join hash scan sort batch group".split()
+    col = Collection.create(spark, root, CollectionConfig(
+        name="serve", num_features=32, num_centroids=4, attribute_schema={"title": "text"}))
+    for b in range(2):
+        rows = [(int(rng.integers(0, 8)), b * 500 + i, [float(x) for x in rng.normal(size=32)],
+                 " ".join(rng.choice(words, 5))) for i in range(500)]
+        col.insert(spark.createDataFrame(
+            rows, "user_id long, doc_id long, vector array<float>, title string"))
+        col.flush()
+    col.build_index()
+    col.remove(list(range(8)), list(range(0, 1000, 10)))
+    q = [float(x) for x in rng.normal(size=32)]
+
+    def hybrid(spark, sf):
+        ids = col.term_search_indexed([1], [("title", "spark")], 1000)
+        return col.ann_search([1], q, 10, pre_filter_ids=ids.select(F.col("doc_id").alias("id")))
+
+    return {
+        "serve_ann_search": lambda spark, sf: col.ann_search([1], q, 10),
+        "serve_term_search_indexed": lambda spark, sf: col.term_search_indexed(
+            [1], [("title", "spark"), ("title", "join")], 50),
+        "serve_hybrid": hybrid,
+    }
+
+
 def main() -> None:
+    import tempfile
+
     from muopdb_spark.session import get_spark
 
     import __spark_entry__ as m
 
     spark = get_spark("plan-audit")
     spark.sparkContext.setLogLevel("ERROR")
-    qs = {**m.queries(), **m.extra_queries()}
+    serve_root = tempfile.mkdtemp(prefix="plan-audit-")
+    qs = {**m.queries(), **m.extra_queries(), **_serve_requests(spark, serve_root)}
     sf = "/root/testdata/sf0.01"
 
     out = [
@@ -417,9 +478,16 @@ def main() -> None:
         plan = buf.getvalue()
         out.append(f"## {name}\n")
         for needle, why in checks:
-            # "!needle" asserts ABSENCE (e.g. no nested-loop join)
-            hit = needle[1:] in plan if needle.startswith("!") else needle in plan
-            status = "PASS" if (hit != needle.startswith("!")) else "MISSING"
+            # "!needle" asserts ABSENCE (e.g. no nested-loop join);
+            # "<op> == N" asserts an exact _plan_profile count
+            count = re.fullmatch(r"(\w+) == (\d+)", needle)
+            if count:
+                ok = _plan_profile(plan)[count[1]] == int(count[2])
+            elif needle.startswith("!"):
+                ok = needle[1:] not in plan
+            else:
+                ok = needle in plan
+            status = "PASS" if ok else "MISSING"
             if status == "MISSING":
                 failures.append((name, needle))
             out.append(f"- **{status}** `{needle}` — {why}")
@@ -427,6 +495,7 @@ def main() -> None:
 
     with open("/root/repo/docs/PLANS.md", "w") as f:
         f.write("\n".join(out))
+    shutil.rmtree(serve_root, ignore_errors=True)
     print("wrote docs/PLANS.md;", "ALL CHECKS PASS" if not failures else f"MISSING: {failures}")
 
 
